@@ -78,23 +78,6 @@ def _persist_tagged(df: DataFrame, tag: str) -> DataFrame:
     return df
 
 
-def _ckpt_tagged(df: DataFrame, tag: str) -> DataFrame:
-    """Like _persist_tagged but via eager localCheckpoint: truncates the
-    lineage to an RDD scan instead of leaving an InMemoryRelation in
-    the plan. Measured decisively faster than persist() when the frame
-    feeds iterative self-referencing consumers (CC / star clustering:
-    cluster_crosswalk 21.7s lazy / 63-131s persisted / 15.5s
-    checkpointed at sf0.1) — the cached-plan re-optimization over
-    InMemoryRelation is the pathology, not the materialization itself.
-    Same tag registry bounds the session to one live copy per tag."""
-    prev = _PERSISTED.pop(tag, None)
-    if prev is not None:
-        prev.unpersist()
-    df = df.localCheckpoint(eager=True)
-    _PERSISTED[tag] = df
-    return df
-
-
 def _docs_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the driver documents table to the contract page shape
     (FIXTURES.md §1 compatibility note: url = 'doc://' || doc_id)."""
@@ -4990,9 +4973,15 @@ def _q_knn_sparsify(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
     # The blocked-levenshtein edge graph feeds BOTH stats branches
     # (agg, degree, CC) and the kNN ranking — materialized so the
-    # quadratic similarity join runs once, not once per branch
-    # (checkpoint, not persist: see _ckpt_tagged)
-    edges = _ckpt_tagged(spark.sql(_KNN_EDGES_SQL), "knn_sparsify.edges")
+    # quadratic similarity join runs once, not once per branch.
+    # Eager localCheckpoint, not persist(): it truncates the lineage to
+    # an RDD scan instead of leaving an InMemoryRelation in the plan,
+    # and the cached-plan re-optimization is what the iterative CC /
+    # star consumers pay for (cluster_crosswalk at sf0.1: 21.7s lazy,
+    # 63-131s persisted, 15.5s checkpointed). DataFrame.unpersist()
+    # frees nothing on a localCheckpoint result, so these frames are
+    # not registered for cleanup like _persist_tagged's.
+    edges = spark.sql(_KNN_EDGES_SQL).localCheckpoint(eager=True)
     sym = edges.select("u", "v", "score").unionAll(
         edges.select(
             F.col("v").alias("u"), F.col("u").alias("v"), "score"
@@ -5007,12 +4996,12 @@ def _q_knn_sparsify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("u", "v").alias("v"),
         )
     )
-    mutual = _ckpt_tagged(
+    mutual = (
         kept.groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("nk"))
         .filter(F.col("nk") == 2)
-        .select("u", "v"),
-        "knn_sparsify.mutual",
+        .select("u", "v")
+        .localCheckpoint(eager=True)
     )
 
     def stats(e: DataFrame, variant: str) -> DataFrame:
@@ -5128,8 +5117,8 @@ def _q_cluster_crosswalk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # same edge graph drives both clusterings being compared —
     # materialize so the blocked-levenshtein join runs once (checkpoint,
-    # NOT persist: see _ckpt_tagged for the measured 4x pathology)
-    edges = _ckpt_tagged(spark.sql(_STAR_EDGES_SQL), "cluster_crosswalk.edges")
+    # not persist: see _q_knn_sparsify)
+    edges = spark.sql(_STAR_EDGES_SQL).localCheckpoint(eager=True)
     cc = connected_components(edges, src="u", dst="v")
     st = star_components(edges, src="u", dst="v").select(
         "node", F.col("component").alias("star")

@@ -28,9 +28,10 @@ class PipelineConfig:
     # "join" — the map-side lexicon fallback for cascades too big to
     # hold per Python worker (~8.5M surface forms): membership resolves
     # via a distributed equi-join on (lang, level, prefix, bucket,
-    # pattern) against the flattened cascade and the greedy detector
-    # replays per document with probe results injected; byte-equal
-    # output (operators/extract_join.py, tests/test_extract_join.py).
+    # pattern) against the flattened cascade. Both run the one row
+    # emitter of operators/extract.py, so the output is byte-equal
+    # (tests/test_extract_join.py); extract_join.extractor_for is the
+    # one selector that reads this field, for every pipeline surface.
     extract_strategy: str = "broadcast"
     # matcher
     connector: str = "_"

@@ -14,9 +14,6 @@ temporal, numeric-ID, and address classes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 # (label, pattern) in priority order. RE2-safe: verified by DuckDB at
 # test time (the oracle compiles every one of these).
 NER_REGEXES: list[tuple[str, str]] = [
@@ -33,41 +30,6 @@ NER_REGEXES: list[tuple[str, str]] = [
     ("STREET_ADDRESS", r"\b[Pp]\.? ?[Oo]\.? ?Box \d+|\b\d{5}(?:-\d{4})?\b"),
     ("ICD_CODE", r"\b[A-TV-Z]\d{2}\.\d{1,4}\b"),
 ]
-
-
-def masked_text_exprs(text_col: str = "text") -> list[tuple[str, "F.Column"]]:
-    """[(label, text-with-earlier-spans-masked)] in priority order:
-    pattern k extracts from the text with patterns 0..k-1 replaced by a
-    space — the reference's sequential claim rule, as ONE nested native
-    projection (codegen keeps it JVM-side)."""
-    out = []
-    cur = F.col(text_col)
-    for label, pat in NER_REGEXES:
-        out.append((label, cur))
-        cur = F.regexp_replace(cur, pat, " ")
-    return out
-
-
-def regex_ner_matches(
-    df: DataFrame, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)
-) -> DataFrame:
-    """One row per (id_cols, label, match). Fully native: per-label
-    regexp_extract_all over the priority-masked text, stacked long and
-    exploded. At 10^12 docs this is a narrow map — no shuffle."""
-    exprs = [
-        F.regexp_extract_all(masked, F.lit(pat), 0).alias(label)
-        for (label, masked), (_, pat) in zip(masked_text_exprs(text_col), NER_REGEXES)
-    ]
-    wide = df.select(*id_cols, *exprs)
-    stack = F.stack(
-        F.lit(len(NER_REGEXES)),
-        *[x for label, _ in NER_REGEXES for x in (F.lit(label), F.col(label))],
-    ).alias("label", "matches")
-    return (
-        wide.select(*id_cols, stack)
-        .withColumn("match", F.explode("matches"))
-        .drop("matches")
-    )
 
 
 def _sql_pattern(pat: str, dialect: str) -> str:

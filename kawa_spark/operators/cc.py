@@ -124,19 +124,6 @@ def connected_components(
     return comp.groupBy("node").agg(F.min("component").alias("component"))
 
 
-def assign_clusters(mentions: DataFrame, components: DataFrame) -> DataFrame:
-    """All mentions -> cluster_id (= component min id; singletons keep
-    their own mention_id)."""
-    return (
-        mentions.join(
-            components, mentions["mention_id"] == components["node"], "left"
-        )
-        .drop("node")
-        .withColumn("cluster_id", F.coalesce("component", "mention_id"))
-        .drop("component")
-    )
-
-
 def assign_surface_clusters(
     mentions: DataFrame, surfaces: DataFrame, components: DataFrame
 ) -> DataFrame:

@@ -1,11 +1,27 @@
-"""Mention extraction as a vectorized Arrow stage.
+"""Mention extraction as a vectorized Arrow stage — the one extraction core.
 
 ``documents (url, text, lang) -> mentions`` via ``mapInPandas``
 (BASELINE.json:15: pandas/Arrow UDFs only — the per-document greedy
 matcher is inherently sequential *within* a document
 (SURVEY.md §4 X11), so we vectorize *across* documents: one Arrow batch
-in, one matcher call per row, executed by a per-process matcher built
-once from a broadcast lexicon).
+in, one matcher call per row).
+
+Every extraction strategy runs on the same three pieces of this module:
+
+* ``_prepared_docs`` — the doc preamble: whitespace normalization and a
+  repartition up to the cluster's parallelism;
+* ``_lexicon_matcher`` — the one lexicon resolver (``word2ner`` seed
+  list or saved ``lexicon_path`` cascade): per row on the executors for
+  the broadcast path, per language on the driver for the join path;
+* ``_emit_mentions`` — the one row emitter: it tokenizes each row with
+  the matcher its caller resolves and yields ``MENTION_SCHEMA`` frames
+  (one sentinel row per document, the bounded norm memo).
+
+``extract_mentions`` (broadcast lexicon, per-process cascade) and
+``extract_join.extract_mentions_join`` (map-side lexicon, probes
+resolved by a join) differ only in how a row gets its matcher;
+``extract_mentions_dedup`` wraps either. ``extract_join.extractor_for``
+is the one place a config selects among them.
 
 The extracted text is byte-identical to the oracle
 (kawa_spark.lexicon.matcher) by construction — same module — and the
@@ -20,7 +36,7 @@ document scan stay relational and reach the parquet reader.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -97,6 +113,20 @@ def _matcher_from_file(
     return m
 
 
+def _lexicon_matcher(
+    lang: str,
+    word2ner: list | None,
+    fp: str | None,
+    lexicon_path: str | None,
+    cfg: PipelineConfig,
+) -> KawaMatcher:
+    """The lexicon resolver: the cached full matcher for ``lang`` from
+    the seed list when there is one, else from the saved cascade."""
+    if word2ner is not None:
+        return _matcher_for(lang, word2ner, fp, cfg)
+    return _matcher_from_file(lang, lexicon_path, cfg)
+
+
 def _lexicon_fingerprint(word2ner: list) -> str:
     h = hashlib.sha1()
     for rec in word2ner:
@@ -110,6 +140,95 @@ def normalize_whitespace(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn(
         text_col, F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
     )
+
+
+def _prepared_docs(
+    docs: DataFrame, word2ner: list | None, lexicon_path: str | None
+) -> DataFrame:
+    """The doc preamble every extractor runs: (url, text, lang) with
+    whitespace-normalized text, spread over the cluster's cores."""
+    if word2ner is None and lexicon_path is None:
+        raise ValueError("extraction needs word2ner or lexicon_path")
+    docs = normalize_whitespace(docs.select("url", "text", "lang"))
+    # extraction is the per-row hot stage; if the source arrived in fewer
+    # splits than the cluster has cores (single small file, coalesced
+    # upstream, ...) the narrow map would underuse the executors. At
+    # scale the scan already yields >= parallelism splits and this is a
+    # no-op check (no job is triggered — partition count is plan-time).
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < parallelism:
+        docs = docs.repartition(parallelism)
+    return docs
+
+
+def _mention_schema(emit_text: bool) -> StructType:
+    if emit_text:
+        return MENTION_SCHEMA
+    return StructType(
+        [f for f in MENTION_SCHEMA.fields if f.name != "extracted_text"]
+    )
+
+
+def _emit_mentions(
+    batches: Iterator[pd.DataFrame],
+    matcher_for: Callable[..., KawaMatcher],
+    emit_text: bool,
+    extra_cols: tuple[str, ...] = (),
+) -> Iterator[pd.DataFrame]:
+    """The extraction row loop of every strategy. Each (url, text, lang)
+    row is tokenized by ``matcher_for(lang or "", *extras)`` — ``extras``
+    being the row's ``extra_cols`` values — and emitted as one
+    ``_mention_schema(emit_text)`` row per mention. ``lang or ""`` is
+    only the matcher key: rows keep the document's own ``lang``, NULL
+    included."""
+    # norm memo: surface forms repeat massively across a corpus
+    # (Zipfian mentions), so canonical_word runs once per distinct
+    # (lang, chunk) per worker process, not once per occurrence
+    norm_cache: dict[tuple, str] = {}
+    names = _mention_schema(emit_text).fieldNames()
+    for pdf in batches:
+        out: dict[str, list] = {name: [] for name in names}
+        text_out = out.get("extracted_text")
+
+        def emit(url, lang, text2, mention, start, end, label, norm):
+            out["url"].append(url)
+            out["lang"].append(lang)
+            if text_out is not None:
+                text_out.append(text2)
+            out["mention"].append(mention)
+            out["start"].append(start)
+            out["end"].append(end)
+            out["label"].append(label)
+            out["norm"].append(norm)
+
+        rows = zip(
+            pdf["url"], pdf["text"], pdf["lang"], *(pdf[c] for c in extra_cols)
+        )
+        for url, text, lang, *extras in rows:
+            key = lang or ""
+            m = matcher_for(key, *extras)
+            res = m.tokenize(text or "")
+            # ONE sentinel row per document carries the extracted
+            # text; mention rows do NOT repeat it (at 10^12 docs the
+            # duplicated text column would dominate every downstream
+            # shuffle/cache)
+            if emit_text:
+                emit(url, lang, res["text"], None, None, None, None, None)
+            for (chunk, start, end), label in res["chunk2ner"].items():
+                norm = norm_cache.get((key, chunk))
+                if norm is None:
+                    norm, _ = m.canonical_word(
+                        chunk, suppress_cjk_tokenize=True, do_lower=True
+                    )
+                    norm = norm.translate(TRANNUM)
+                    if len(norm_cache) >= 1_000_000:
+                        # same worker-memory bound as the matcher's
+                        # _probe_cache: high-cardinality vocabularies
+                        # (CJK, digit-heavy) must not grow unbounded
+                        norm_cache.clear()
+                    norm_cache[(key, chunk)] = norm
+                emit(url, lang, None, chunk, start, end, label, norm)
+        yield pd.DataFrame(out)
 
 
 def _with_mention_id(mentions: DataFrame) -> DataFrame:
@@ -166,17 +285,19 @@ def extract_mentions_dedup(
     text hash — the map-side min(struct) combiner keeps ONE text per
     key per map task, so the exchange carries ~distinct-texts rows, not
     the corpus; extraction then runs over the deduped set; the fan-out
-    join shuffles only (tkey, url) pairs plus the narrow mention rows
-    (AQE broadcasts the mention side when the distinct set is small).
-    With no duplication it degrades to the per-document cost plus one
-    hash exchange — opt in (cfg.dedup_texts) when the corpus is
+    join shuffles only (tkey, url, lang) rows plus the narrow mention
+    rows (AQE broadcasts the mention side when the distinct set is
+    small). With no duplication it degrades to the per-document cost
+    plus one hash exchange — opt in (cfg.dedup_texts) when the corpus is
     crawl-shaped."""
     cfg = cfg or PipelineConfig()
     docs = normalize_whitespace(docs.select("url", "text", "lang"))
     keyed = docs.withColumn(
         "tkey", _text_dedup_key(F.col("lang"), F.col("text"))
     )
-    mapping = keyed.select("tkey", "url")
+    # each url keeps its OWN lang: the key folds NULL and '' together,
+    # so the representative's lang may be the other spelling
+    mapping = keyed.select("tkey", "url", "lang")
     reps = (
         keyed.groupBy("tkey")
         .agg(F.min(F.struct("url", "lang", "text")).alias("s"))
@@ -189,15 +310,15 @@ def extract_mentions_dedup(
         )
     )
     # ``_inner``: the per-representative extractor (default the
-    # broadcast path; the pipeline passes extract_mentions_join for
-    # cfg.extract_strategy="join")
+    # broadcast path; extract_join.extractor_for passes the join path
+    # for cfg.extract_strategy="join")
     rep_out = (_inner or extract_mentions)(
         reps, word2ner, cfg, emit_text=emit_text, lexicon_path=lexicon_path
-    ).drop("mention_id")
+    ).drop("mention_id", "lang")
     rep_cols = [c for c in rep_out.columns if c != "url"]
     out = mapping.join(
         rep_out.withColumnRenamed("url", "tkey"), "tkey"
-    ).select("url", *rep_cols)
+    ).select("url", "lang", *rep_cols)
     return _with_mention_id(out)
 
 
@@ -219,84 +340,26 @@ def extract_mentions(
     The lexicon rides a Spark broadcast; matchers build lazily per
     executor process (heavy init done once, ontology_manager-style)."""
     cfg = cfg or PipelineConfig()
-    spark = docs.sparkSession
-    if word2ner is None and lexicon_path is None:
-        raise ValueError("extract_mentions needs word2ner or lexicon_path")
+    docs = _prepared_docs(docs, word2ner, lexicon_path)
     # saved-cascade mode ships only the path; seed-list mode broadcasts
     fp = _lexicon_fingerprint(word2ner) if word2ner is not None else None
-    bc = spark.sparkContext.broadcast(word2ner) if word2ner is not None else None
-    connector = cfg.connector
-
-    docs = normalize_whitespace(docs.select("url", "text", "lang"))
-
-    # extraction is the per-row hot stage; if the source arrived in fewer
-    # splits than the cluster has cores (single small file, coalesced
-    # upstream, ...) the narrow map would underuse the executors. At
-    # scale the scan already yields >= parallelism splits and this is a
-    # no-op check (no job is triggered — partition count is plan-time).
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
+    bc = (
+        docs.sparkSession.sparkContext.broadcast(word2ner)
+        if word2ner is not None
+        else None
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lexicon = bc.value if bc is not None else None
-        # norm memo: surface forms repeat massively across a corpus
-        # (Zipfian mentions), so canonical_word runs once per distinct
-        # (lang, chunk) per worker process, not once per occurrence
-        norm_cache: dict[tuple, str] = {}
-        for pdf in batches:
-            out: dict[str, list] = {
-                f.name: []
-                for f in MENTION_SCHEMA.fields
-                if emit_text or f.name != "extracted_text"
-            }
-            text_out = out.get("extracted_text")
+        return _emit_mentions(
+            batches,
+            lambda lang: _lexicon_matcher(lang, lexicon, fp, lexicon_path, cfg),
+            emit_text,
+        )
 
-            def emit(url, lang, text2, mention, start, end, label, norm):
-                out["url"].append(url)
-                out["lang"].append(lang)
-                if text_out is not None:
-                    text_out.append(text2)
-                out["mention"].append(mention)
-                out["start"].append(start)
-                out["end"].append(end)
-                out["label"].append(label)
-                out["norm"].append(norm)
-
-            for url, text, lang in zip(pdf["url"], pdf["text"], pdf["lang"]):
-                if lexicon is not None:
-                    m = _matcher_for(lang or "", lexicon, fp, cfg)
-                else:
-                    m = _matcher_from_file(lang or "", lexicon_path, cfg)
-                res = m.tokenize(text or "")
-                # ONE sentinel row per document carries the extracted
-                # text; mention rows do NOT repeat it (at 10^12 docs the
-                # duplicated text column would dominate every downstream
-                # shuffle/cache)
-                if emit_text:
-                    emit(url, lang, res["text"], None, None, None, None, None)
-                for (chunk, start, end), label in res["chunk2ner"].items():
-                    key = (lang, chunk)
-                    norm = norm_cache.get(key)
-                    if norm is None:
-                        norm, _ = m.canonical_word(
-                            chunk, suppress_cjk_tokenize=True, do_lower=True
-                        )
-                        norm = norm.translate(TRANNUM)
-                        if len(norm_cache) >= 1_000_000:
-                            # same worker-memory bound as the matcher's
-                            # _probe_cache: high-cardinality vocabularies
-                            # (CJK, digit-heavy) must not grow unbounded
-                            norm_cache.clear()
-                        norm_cache[key] = norm
-                    emit(url, lang, None, chunk, start, end, label, norm)
-            yield pd.DataFrame(out)
-
-    schema = MENTION_SCHEMA
-    if not emit_text:
-        schema = StructType([f for f in MENTION_SCHEMA.fields if f.name != "extracted_text"])
-
-    return _with_mention_id(docs.mapInPandas(run, schema=schema))
+    return _with_mention_id(
+        docs.mapInPandas(run, schema=_mention_schema(emit_text))
+    )
 
 
 def split_outputs(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:

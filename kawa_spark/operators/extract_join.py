@@ -34,13 +34,16 @@ affects WHICH words get probed, never what a probe returns. So:
    (The cascade is per-language because the build's leading-stopword
    strip is language-dependent — exactly like ``_matcher_for`` building
    one matcher per lang from the same word2ner.)
-5. **Replay** (narrow mapInPandas): per document, run the REAL
-   ``KawaMatcher.detect/tokenize`` with ``in_lexicon`` overridden to a
-   dict lookup of that document's resolved probes (``_ReplayMatcher``).
-   Every quirk (Q1 final-token, Q2 offsets, Q6 dot restore, Q7
-   unlabeled fusion, splice) executes in the one shared implementation,
-   so the output is byte-identical to the broadcast path whenever the
-   probe join is faithful — pinned by tests/test_extract_join.py.
+5. **Replay** (narrow mapInPandas): the broadcast path's row emitter
+   (``extract._emit_mentions``) over the documents, each row's matcher
+   being the REAL ``KawaMatcher.detect/tokenize`` with ``in_lexicon``
+   overridden to a dict lookup of that document's resolved probes
+   (``_ReplayMatcher``). Every quirk (Q1 final-token, Q2 offsets, Q6
+   dot restore, Q7 unlabeled fusion, splice) and every emitted row
+   (sentinel, norm, NULL lang) comes from the one shared
+   implementation, so the output is byte-identical to the broadcast
+   path whenever the probe join is faithful — pinned by
+   tests/test_extract_join.py.
 
 Scale shape (10^12 docs, 10^7-8 lexicon rows): two narrow maps over
 documents, one distinct-shuffle on (lang, word) (partial-agg), one
@@ -54,15 +57,18 @@ the zone maps + stopwords + per-document lookup dicts.
 Trade-off vs broadcast: ~4 extra exchanges and a second documents
 pass, in return for O(1)-per-worker memory in the lexicon size. Use
 when the cascade exceeds the broadcast guards (cfg.extract_strategy
-= "join"); below them the broadcast path is faster.
+= "join"); below them the broadcast path is faster. ``extractor_for``
+at the end of this module is the one strategy selector every pipeline
+surface extracts through.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -76,12 +82,15 @@ from ..config import PipelineConfig
 from ..lexicon.cjk import cjk_detect
 from ..lexicon.matcher import _PERSON_LIKE, KawaMatcher
 from .extract import (
-    MENTION_SCHEMA,
     TRANNUM,
-    _matcher_for,
+    _emit_mentions,
     _lexicon_fingerprint,
+    _lexicon_matcher,
+    _mention_schema,
+    _prepared_docs,
     _with_mention_id,
-    normalize_whitespace,
+    extract_mentions,
+    extract_mentions_dedup,
 )
 
 # ---------------------------------------------------------------------
@@ -142,23 +151,6 @@ def flatten_lexicon(matcher: KawaMatcher, lang: str):
 # ---------------------------------------------------------------------
 
 _PM_CACHE: dict[tuple, KawaMatcher] = {}
-
-# one live candidate checkpoint per tag per session (same bounded-cache
-# pattern as __spark_entry__._ckpt_tagged): the candidate frame is read
-# by BOTH the distinct-probe branch and the per-url hit join, and its
-# recompute cost is a full Python mapInPandas pass over the corpus —
-# exactly the materialize-when-artifact-is-cheaper-than-rebuild case.
-_CKPTS: dict[str, DataFrame] = {}
-
-
-def _ckpt_tagged(df: DataFrame, tag: str) -> DataFrame:
-    prev = _CKPTS.pop(tag, None)
-    if prev is not None:
-        prev.unpersist()
-    df = df.localCheckpoint(eager=True)
-    _CKPTS[tag] = df
-    return df
-
 
 def _probe_matcher(lang: str, cfg: PipelineConfig) -> KawaMatcher:
     key = (lang, cfg.connector, cfg.compound_word_step, cfg.word_shingle_cutoff)
@@ -410,17 +402,12 @@ def extract_mentions_join(
     ``langs`` lists the corpus languages; when omitted it is derived
     with one bounded collect (distinct langs — at most a few hundred
     values on any real corpus). Output schema, mention ids, and
-    sentinel rows match ``extract_mentions``.
+    sentinel rows match ``extract_mentions``: the replay runs the same
+    row emitter, only each row's matcher differs.
     """
     cfg = cfg or PipelineConfig()
+    docs = _prepared_docs(docs, word2ner, lexicon_path)
     spark = docs.sparkSession
-    if word2ner is None and lexicon_path is None:
-        raise ValueError("extract_mentions_join needs word2ner or lexicon_path")
-
-    docs = normalize_whitespace(docs.select("url", "text", "lang"))
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
 
     if langs is None:
         # bounded collect: distinct languages, not data rows
@@ -434,12 +421,7 @@ def extract_mentions_join(
     n_levels_by_lang: dict[str, int] = {}
     fp = _lexicon_fingerprint(word2ner) if word2ner is not None else None
     for lang in sorted(set(langs)):
-        if word2ner is not None:
-            m = _matcher_for(lang, word2ner, fp, cfg)
-        else:
-            from .extract import _matcher_from_file
-
-            m = _matcher_from_file(lang, lexicon_path, cfg)
+        m = _lexicon_matcher(lang, word2ner, fp, lexicon_path, cfg)
         lrows, lbounds, ln = flatten_lexicon(m, lang)
         rows.extend(lrows)
         bounds_by_lang[lang] = lbounds
@@ -451,9 +433,7 @@ def extract_mentions_join(
     # join both read the candidates, and recomputing them means a
     # second full Python candidate scan over the corpus (measured
     # win in scripts/extract_join_bench.py)
-    cands = _ckpt_tagged(
-        candidate_windows(docs, cfg, bc_bounds), "extract_join.cands"
-    )
+    cands = candidate_windows(docs, cfg, bc_bounds).localCheckpoint(eager=True)
     distinct_cands = cands.select("lang", "word").distinct()
     keys = probe_keys(distinct_cands, cfg, n_levels_by_lang)
     winners = resolve_probes(keys, lex_table)
@@ -468,59 +448,43 @@ def extract_mentions_join(
     def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         by_lang = bc_bounds.value
         rm_cache: dict[str, _ReplayMatcher] = {}
-        norm_cache: dict[tuple, str] = {}
-        for pdf in batches:
-            out: dict[str, list] = {
-                f.name: []
-                for f in MENTION_SCHEMA.fields
-                if emit_text or f.name != "extracted_text"
-            }
-            text_out = out.get("extracted_text")
 
-            def emit(url, lang, text2, mention, start, end, label, norm):
-                out["url"].append(url)
-                out["lang"].append(lang)
-                if text_out is not None:
-                    text_out.append(text2)
-                out["mention"].append(mention)
-                out["start"].append(start)
-                out["end"].append(end)
-                out["label"].append(label)
-                out["norm"].append(norm)
+        def matcher_for(lang: str, hits) -> _ReplayMatcher:
+            rm = rm_cache.get(lang)
+            if rm is None:
+                rm = _ReplayMatcher(lang, cfg, by_lang.get(lang, {}))
+                rm_cache[lang] = rm
+            try:
+                items = [] if hits is None else list(hits)
+            except TypeError:  # NaN from the left join
+                items = []
+            rm.lookup = {h["word"]: h["label"] for h in items}
+            return rm
 
-            for url, text, lang, hits in zip(
-                pdf["url"], pdf["text"], pdf["lang"], pdf["hits"]
-            ):
-                lang = lang or ""
-                rm = rm_cache.get(lang)
-                if rm is None:
-                    rm = _ReplayMatcher(lang, cfg, by_lang.get(lang, {}))
-                    rm_cache[lang] = rm
-                try:
-                    items = [] if hits is None else list(hits)
-                except TypeError:  # NaN from the left join
-                    items = []
-                rm.lookup = {h["word"]: h["label"] for h in items}
-                res = rm.tokenize(text or "")
-                if emit_text:
-                    emit(url, lang, res["text"], None, None, None, None, None)
-                for (chunk, start, end), label in res["chunk2ner"].items():
-                    key = (lang, chunk)
-                    norm = norm_cache.get(key)
-                    if norm is None:
-                        norm, _ = rm.canonical_word(
-                            chunk, suppress_cjk_tokenize=True, do_lower=True
-                        )
-                        norm = norm.translate(TRANNUM)
-                        if len(norm_cache) >= 1_000_000:
-                            norm_cache.clear()
-                        norm_cache[key] = norm
-                    emit(url, lang, None, chunk, start, end, label, norm)
-            yield pd.DataFrame(out)
+        return _emit_mentions(batches, matcher_for, emit_text, ("hits",))
 
-    schema = MENTION_SCHEMA
-    if not emit_text:
-        schema = StructType(
-            [f for f in MENTION_SCHEMA.fields if f.name != "extracted_text"]
-        )
-    return _with_mention_id(joined.mapInPandas(replay, schema=schema))
+    return _with_mention_id(
+        joined.mapInPandas(replay, schema=_mention_schema(emit_text))
+    )
+
+
+# ---------------------------------------------------------------------
+# strategy selection
+# ---------------------------------------------------------------------
+
+
+def extractor_for(cfg: PipelineConfig):
+    """The extractor ``cfg`` selects — the one place that reads
+    ``cfg.extract_strategy``: the broadcast or join path, wrapped in the
+    distinct-text path when ``cfg.dedup_texts``. Same call signature as
+    ``extract_mentions``; every pipeline surface (``ERPipeline.run``,
+    ``ERPipeline.extracted_text``, ``incremental_link``, streaming
+    ingest) extracts through it."""
+    inner = (
+        extract_mentions_join
+        if cfg.extract_strategy == "join"
+        else extract_mentions
+    )
+    if cfg.dedup_texts:
+        return partial(extract_mentions_dedup, _inner=inner)
+    return inner

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from .blocking import add_block_keys, bounded_cross_pairs, candidate_pairs
 from .cc import connected_components
-from .extract import extract_mentions, extract_mentions_dedup
+from .extract_join import extractor_for
 from .scoring import match_edges, score_pairs
 
 STATE_STAGES = ["surfaces", "block_keys", "surface_clusters"]
@@ -182,9 +182,8 @@ def incremental_link(pipe, state: ERState, new_docs: DataFrame) -> IncrementResu
     ``result.remap`` (delta-bounded, broadcastable)."""
     cfg = pipe.cfg
 
-    _extract = extract_mentions_dedup if cfg.dedup_texts else extract_mentions
     new_mentions = _ckpt(
-        _extract(
+        extractor_for(cfg)(
             new_docs, pipe.word2ner, cfg, emit_text=False,
             lexicon_path=pipe.lexicon_path,
         ).filter(F.col("mention").isNotNull())

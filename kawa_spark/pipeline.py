@@ -33,11 +33,8 @@ from .operators.cc import (
     repair_components,
 )
 from .operators.urls import dedup_canonical
-from .operators.extract import (
-    extract_mentions,
-    extract_mentions_dedup,
-    split_outputs,
-)
+from .operators.extract import split_outputs
+from .operators.extract_join import extractor_for
 from .operators.scoring import fs_match_edges, match_edges, score_pairs
 
 STAGES = ["mentions", "surfaces", "block_keys", "pairs", "edges", "clusters"]
@@ -278,28 +275,11 @@ class ERPipeline:
         # clustering never reads the spliced text -> emit_text=False
         # keeps the 10^12-row text column out of Arrow/cache entirely
         # (the byte-identity surface is extracted_text(), a separate run)
-        # cfg.dedup_texts routes through the distinct-text matcher path
-        # (one matcher call per distinct (lang, text), fan back out to
-        # urls) — identical rows, crawl-duplication short-circuited
-        if cfg.extract_strategy == "join":
-            # map-side lexicon fallback: per-lang cascades built once on
-            # the driver, membership via distributed equi-join, greedy
-            # replay per doc (operators/extract_join.py). Composes with
-            # dedup_texts through the same inner-extractor switch.
-            from .operators.extract_join import extract_mentions_join
-
-            _inner = extract_mentions_join
-        else:
-            _inner = extract_mentions
-        _extract = (
-            (lambda *a, **kw: extract_mentions_dedup(*a, _inner=_inner, **kw))
-            if cfg.dedup_texts
-            else _inner
-        )
+        extract = extractor_for(cfg)
         mentions = self._stage(
             "mentions",
             resume,
-            lambda: _extract(
+            lambda: extract(
                 docs, self.word2ner, cfg, emit_text=False,
                 lexicon_path=self.lexicon_path,
             ).filter(F.col("mention").isNotNull()),
@@ -510,11 +490,8 @@ class ERPipeline:
 
     def extracted_text(self, docs: DataFrame) -> DataFrame:
         """(url, text) after extraction splice — the byte-identity surface."""
-        _extract = (
-            extract_mentions_dedup if self.cfg.dedup_texts else extract_mentions
-        )
         extracted, _ = split_outputs(
-            _extract(
+            extractor_for(self.cfg)(
                 docs, self.word2ner, self.cfg, lexicon_path=self.lexicon_path
             )
         )

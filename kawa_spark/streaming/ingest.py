@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.blocking import add_block_keys, candidate_pairs
 from ..operators.cc import connected_components
-from ..operators.extract import extract_mentions
+from ..operators.extract_join import extractor_for
 from ..operators.scoring import match_edges, score_pairs
 
 
@@ -54,7 +54,7 @@ class StreamingERIngest:
     def process_batch(self, docs: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
         mentions = (
-            extract_mentions(docs, self.word2ner, cfg, emit_text=False)
+            extractor_for(cfg)(docs, self.word2ner, cfg, emit_text=False)
             .filter(F.col("mention").isNotNull())
         )
         # idempotent per-batch output: replay overwrites, never appends

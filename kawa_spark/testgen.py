@@ -18,7 +18,6 @@ One designated hot entity owns ~30% of planted mentions (skew test).
 from __future__ import annotations
 
 import datetime as _dt
-import math
 import random
 from dataclasses import dataclass, field
 
@@ -208,9 +207,3 @@ def corpus_to_pandas(corpus: Corpus):
     )
     return docs, w2n, emb, truth
 
-
-def scale_params(sf: float) -> dict:
-    """Map a TESTDATA-style scale factor to generator sizes."""
-    n_docs = max(50, int(5000 * sf * 10))  # sf0.001->50, sf0.01->500, sf0.1->5000
-    n_entities = max(24, min(480, int(48 * math.sqrt(sf / 0.001))))
-    return {"n_docs": n_docs, "n_entities": n_entities}

@@ -75,16 +75,23 @@ class TestDedupExtractEquality:
     def test_null_lang_matches_empty_lang(self, spark, corpus):
         """NULL lang and '' lang fold to the same matcher — the dedup
         key merges them, and the merged extraction must equal the
-        per-document one for both spellings."""
+        per-document one for both spellings: each url keeps its own
+        lang even when a doc of the other spelling shares its text."""
         docs, _, _, _ = corpus_to_pandas(corpus)
         two = docs[["url", "text"]].head(4).copy()
         two["lang"] = [None, "", None, ""]
+        # the first NULL doc and the first '' doc share one text
+        two.iloc[1, two.columns.get_loc("text")] = two["text"].iloc[0]
         df = spark.createDataFrame(two)
         a = _rows(extract_mentions(df, corpus.word2ner, emit_text=False))
         b = _rows(
             extract_mentions_dedup(df, corpus.word2ner, emit_text=False)
         )
         assert a == b
+        shared = set(two["url"].iloc[:2])
+        assert {(r[0], r[1]) for r in a if r[0] in shared} == {
+            (two["url"].iloc[0], None), (two["url"].iloc[1], "")
+        }
 
     def test_pipeline_clusters_identical(self, spark, corpus, dup_docs_df):
         """End-to-end: cfg.dedup_texts=True yields row-identical

@@ -9,6 +9,7 @@ dedup_texts composition holds."""
 from __future__ import annotations
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from kawa_spark.config import PipelineConfig
@@ -105,13 +106,23 @@ class TestByteIdentity:
     ):
         cfg = PipelineConfig()
         w2n = [list(r) for r in corpus.word2ner]
-        a = extract_mentions(docs_df, w2n, cfg).toPandas()
-        b = extract_mentions_join(docs_df, w2n, cfg).toPandas()
+        # NULL-lang copies of a few docs: both paths match them with the
+        # '' matcher and must both emit the NULL lang unchanged
+        docs, _, _, _ = corpus_to_pandas(corpus)
+        null_lang = docs[["url", "text"]].head(6).copy()
+        null_lang["url"] = null_lang["url"] + "#null-lang"
+        null_lang["lang"] = None
+        docs_in = docs_df.unionByName(
+            spark.createDataFrame(null_lang, docs_df.schema)
+        )
+        a = extract_mentions(docs_in, w2n, cfg).toPandas()
+        b = extract_mentions_join(docs_in, w2n, cfg).toPandas()
         assert list(a.columns) == list(b.columns)
         assert _rowset(a) == _rowset(b)
         # the corpus actually exercises multiple languages and mentions
         assert a["lang"].nunique() > 1
         assert a["mention"].notna().sum() > 0
+        assert a["lang"].isna().sum() > len(null_lang)
 
     def test_emit_text_false_matches_too(self, spark, corpus, docs_df):
         cfg = PipelineConfig()
@@ -128,6 +139,18 @@ class TestByteIdentity:
         a = extract_mentions_join(docs_df, w2n, cfg).toPandas()
         b = extract_mentions_join(docs_df, w2n, cfg).toPandas()
         assert _rowset(a) == _rowset(b)
+
+    def test_first_result_survives_a_second_call(self, spark, corpus, docs_df):
+        """A returned frame stays readable, with every row, after the
+        next call materializes its own candidate checkpoint."""
+        cfg = PipelineConfig()
+        w2n = [list(r) for r in corpus.word2ner]
+        first = extract_mentions_join(docs_df, w2n, cfg)
+        want = _rowset(first.toPandas())
+        extract_mentions_join(
+            docs_df.filter(F.col("lang") == "en"), w2n, cfg
+        ).count()
+        assert _rowset(first.toPandas()) == want and len(want) > 0
 
 
 class TestPipelineJoinStrategy:
@@ -177,6 +200,35 @@ class TestPipelineJoinStrategy:
             if r.mention == r.mention and r.mention is not None
         }
         assert got == want and len(got) > 0
+
+    @pytest.mark.parametrize("dedup_texts", [False, True])
+    def test_extracted_text_never_broadcasts_lexicon(
+        self, spark, corpus, docs_df, monkeypatch, dedup_texts
+    ):
+        """The byte-identity surface follows extract_strategy: under
+        "join" it ships no word2ner broadcast, and its text equals the
+        broadcast strategy's."""
+        w2n = [list(r) for r in corpus.word2ner]
+
+        def texts(strategy):
+            cfg = PipelineConfig(
+                extract_strategy=strategy, dedup_texts=dedup_texts
+            )
+            pipe = ERPipeline(spark, word2ner=w2n, cfg=cfg)
+            return {tuple(r) for r in pipe.extracted_text(docs_df).collect()}
+
+        want = texts("broadcast")
+        shipped = []
+        real_broadcast = SparkContext.broadcast
+
+        def spy(sc, value):
+            shipped.append(value)
+            return real_broadcast(sc, value)
+
+        monkeypatch.setattr(SparkContext, "broadcast", spy)
+        got = texts("join")
+        assert not any(v is w2n or v == w2n for v in shipped)
+        assert got == want and len(got) == docs_df.count()
 
     def test_rejects_unknown_strategy(self, spark, corpus):
         with pytest.raises(ValueError, match="extract_strategy"):
